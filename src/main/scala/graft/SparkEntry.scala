@@ -59,7 +59,7 @@ object SparkEntry {
         // MinimumBoundingCircle (Welzl result via exhaustive hull
         // candidates; oracle = HardOracles.circleSql structural twin).
         "minimum_bounding_circle" -> ((s: SparkSession, dir: String) => {
-          // lon/lat carried through the membership join (keep=) instead of
+          // lon/lat carried through the membership probe (keep=) instead of
           // re-scanning pages and re-joining on doc_id — same rows, one
           // scan and one join fewer (r06 optimization round).
           val pts = PipJoin.zoneMembership(s, Tables.pages(s, dir),

@@ -11,11 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType}
 /** PipAny(x, y, xss, yss): true iff the point is inside (winding parity,
   * PointInPolygon semantics) ANY of the rings given as nested arrays.
   *
-  * This exists so the hull/hole combine of the PIP join happens inside one
-  * map-side expression per (page, zone): rings are grouped per (cell, fid)
-  * on the broadcast side, and no shuffle of the page side is needed at all
-  * (the groupBy(doc_id, fid) combine this replaces was the flagship's only
-  * big-side shuffle — it cost ~3× at local[32] on 64M pages). */
+  * This exists so the hull/hole combine of the shuffled cell join
+  * (`PipJoin.zoneMembershipShuffled`) happens inside one expression per
+  * (page, zone): rings are grouped per (cell, fid) on the ring side, so no
+  * groupBy(doc_id, fid) combine is needed after the join. */
 case class PipAny(x: Expression, y: Expression,
                   xss: Expression, yss: Expression)
     extends QuaternaryExpression {

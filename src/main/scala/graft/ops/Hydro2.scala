@@ -133,6 +133,7 @@ object Hydro2 {
         len = next.selectExpr("ix", "iy", "nc0 AS nc", "nd0 AS nd")
         rounds += 1
       }
+      require(changed == 0, "downslope_flowpath_length did not converge in 10000 rounds")
       len.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS flowpath_len")
         .orderBy("ix", "iy")
     }),
@@ -192,6 +193,7 @@ object Hydro2 {
         up = next.selectExpr("ix", "iy", "nc0 AS nc", "nd0 AS nd")
         rounds += 1
       }
+      require(changed == 0, "max_upslope_flowpath did not converge in 10000 rounds")
       up.selectExpr("ix", "iy", s"${lenOf("nc", "nd")} AS upslope_len")
         .orderBy("ix", "iy")
     })

@@ -1,31 +1,32 @@
 package graft.ops
 
 import graft.core.{Geo, Ring, SparkD, Zones}
-import graft.expr.{Cells, Morton, PipAny, PointInPolygon}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.expr.{Cells, Morton, PipAny, ZoneIndex, ZoneProbe}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Partitioned point-in-polygon join (north-star operator #1).
+/** Point-in-polygon zone membership (north-star operator #1).
   *
   * Plan shape (scale-first):
-  *   1. polygons → rings → covered cells at `res` (bbox cover, driver/flatMap
-  *      side — rings are the small side);
+  *   1. polygons → rings → covered cells at `res` (bbox cover, driver side
+  *      — rings are the small side);
   *   2. pages carry a single Morton cell id at the same res (pure
-  *      arithmetic, broadcast-free — expr/Cells.scala);
-  *   3. cell-equi join, broadcast when the ring side is small — the cell
-  *      key IS the bbox pre-filter the reference applies before PIP
-  *      (clip_lidar_to_polygon.rs:203-229);
-  *   4. exact winding-parity PIP (expr/PointInPolygon.scala, clone of
-  *      poly_ops.rs:28-70) as the join residual;
+  *      arithmetic — expr/Cells.scala);
+  *   3–4. zone-probe expression over a driver-built cell index; no join, no
+  *      broadcast exchange (expr/ZoneProbe.scala): the cell key IS the bbox
+  *      pre-filter the reference applies before PIP
+  *      (clip_lidar_to_polygon.rs:203-229), and each candidate zone gets
+  *      the exact winding-parity PIP (expr/PointInPolygon.scala, clone of
+  *      poly_ops.rs:28-70);
   *   5. hull/hole combine: inside ⇔ in ≥1 hull ring and in 0 hole rings
   *      (clip semantics: hull parts add, holes erase —
   *      clip_raster_to_polygon.rs:231-300).
   *
-  * At 10^12 pages the big side is never shuffled for the join itself (hash
-  * broadcast); the only shuffle is the small post-PIP membership aggregate.
-  * If the polygon side outgrows broadcast, the same plan degrades gracefully
-  * to a shuffled equi-join on the cell key, where AQE skew-split plus the
-  * hot-cell salting in `Skew.scala` keep partitions bounded.
+  * At 10^12 pages the big side is never shuffled and nothing is collected
+  * to the driver; the only shuffle is the small post-PIP aggregate. If the
+  * polygon side outgrows the driver, the same membership runs as a
+  * shuffled equi-join on the cell key (`zoneMembershipShuffled`), where
+  * the hot-cell salting in `Skew.scala` keeps partitions bounded.
   */
 object PipJoin {
   /** Cells (Morton, at `res`) covered by a bbox — inclusive floor ranges. */
@@ -39,15 +40,6 @@ object PipJoin {
       ix <- ixOf(minX) to ixOf(maxX)
       iy <- iyOf(minY) to iyOf(maxY)
     } yield Morton.encode(ix, iy, res)
-  }
-
-  /** Ring side of the join: one row per (covered cell, ring). */
-  def ringCells(spark: SparkSession, rings: Seq[Ring], res: Int): DataFrame = {
-    import spark.implicits._
-    rings.flatMap { r =>
-      coverCells(r.minX, r.maxX, r.minY, r.maxY, res)
-        .map(c => (c, r.fid, r.ringId, r.isHole, r.xs, r.ys))
-    }.toDF("cell", "fid", "ringId", "isHole", "xs", "ys")
   }
 
   /** Add ix/iy/cell columns at `res` to a lat/lon DataFrame.
@@ -67,55 +59,39 @@ object PipJoin {
       .withColumn("iy", expr(Geo.iy(SparkD, latCol, res)))
       .withColumn("cell", coalesce(Cells.mortonCell(col("ix"), col("iy"), res), lit(-1L)))
 
-  /** Ring side grouped per (cell, fid): hull and hole rings as nested
-    * arrays, so membership resolves in ONE map-side expression per
-    * (page, zone) — no shuffle of the page side at all. */
-  def ringCellsGrouped(spark: SparkSession, rings: Seq[Ring], res: Int): DataFrame = {
-    // Plan-level memo for the static zone fixture: the grouped ring frame
-    // is pure driver data (LocalTableScan) and identical for every query
-    // in a session; rebuilding it paid the Dataset-encoder derivation +
-    // local relation conversion on every query build. Reference equality
-    // on the rings Seq keeps non-default callers uncached. No data or
-    // results are cached — this is a driver-side literal table.
-    if (rings eq Zones.worldZones)
-      rcGroupedCache.computeIfAbsent((spark, res),
-        _ => buildRingCellsGrouped(spark, rings, res))
-    else buildRingCellsGrouped(spark, rings, res)
-  }
-
-  private val rcGroupedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), DataFrame]()
-
-  private def buildRingCellsGrouped(spark: SparkSession, rings: Seq[Ring], res: Int): DataFrame = {
-    import spark.implicits._
+  /** (cell, fid, that fid's rings whose bbox covers the cell) — the
+    * grouping shared by the zone-probe index and the grouped ring frame. */
+  private def cellGroups(rings: Seq[Ring], res: Int): Seq[(Long, Int, Seq[Ring])] =
     rings.flatMap { r =>
       coverCells(r.minX, r.maxX, r.minY, r.maxY, res).map(c => (c, r))
     }.groupBy { case (c, r) => (c, r.fid) }
-      .map { case ((c, fid), rs) =>
-        val hulls = rs.map(_._2).filter(!_.isHole)
-        val holes = rs.map(_._2).filter(_.isHole)
-        (c, fid, hulls.map(_.xs).toArray, hulls.map(_.ys).toArray,
-          holes.map(_.xs).toArray, holes.map(_.ys).toArray)
-      }.toSeq
-      .toDF("cell", "fid", "hxs", "hys", "oxs", "oys")
+      .map { case ((c, fid), rs) => (c, fid, rs.map(_._2)) }
+      .toSeq
+
+  /** Ring side grouped per (cell, fid) as a frame: hull and hole rings as
+    * nested arrays, for the shuffled membership join. */
+  def ringCellsGrouped(spark: SparkSession, rings: Seq[Ring], res: Int): DataFrame = {
+    import spark.implicits._
+    cellGroups(rings, res).map { case (c, fid, rs) =>
+      val (holes, hulls) = rs.partition(_.isHole)
+      (c, fid, hulls.map(_.xs).toArray, hulls.map(_.ys).toArray,
+        holes.map(_.xs).toArray, holes.map(_.ys).toArray)
+    }.toDF("cell", "fid", "hxs", "hys", "oxs", "oys")
   }
 
-  /** (doc_id, fid) membership pairs: which pages fall inside which zone.
-    * inside ⇔ in ≥1 hull ring and in 0 hole rings — evaluated map-side by
-    * graft_pip_any after the broadcast cell join. */
+  /** (doc_id, fid, keep…) membership rows: which pages fall inside which
+    * zone, one row per (page, zone), via `graft_zone_probe` over the cell
+    * index built here on the driver. */
   def zoneMembership(spark: SparkSession, pages: DataFrame,
                      rings: Seq[Ring] = Zones.worldZones,
                      res: Int = 6, keep: Seq[String] = Nil): DataFrame = {
-    val p = withCell(pages, res)
-    val rc = ringCellsGrouped(spark, rings, res)
-    p.join(broadcast(rc), "cell")
-      .filter(PipAny.pipAny(col("lon"), col("lat"), col("hxs"), col("hys")) &&
-        !PipAny.pipAny(col("lon"), col("lat"), col("oxs"), col("oys")))
-      .select(("doc_id" +: "fid" +: keep).map(col): _*)
+    val index = ZoneIndex.build(cellGroups(rings, res))
+    val fid = explode(ZoneProbe.zoneProbe(col("cell"), col("lon"), col("lat"), index)).as("fid")
+    withCell(pages, res).select(col("doc_id") +: fid +: keep.map(col): _*)
   }
 
   /** DEGRADED PATH, exercised by the gated `pip_zonal_count_shuffled`
-    * query: when the grouped ring side outgrows broadcast, the same
+    * query: when the ring side outgrows the driver-built index, the same
     * membership runs as a SHUFFLED cell-equi join with explicit hot-cell
     * salting (graft.ops.Skew.saltedJoin: pages take a deterministic salt,
     * ring groups replicate to all salts) plus a shuffle-hash hint so the

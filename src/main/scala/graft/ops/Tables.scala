@@ -8,7 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * deterministically from `documents` via the shared twin-SQL (Dialect.scala)
   * so that the Spark plan and the DuckDB oracle compute bit-identical
   * lat/lon/url. `text` is carried through untouched (byte-identity
-  * invariant). */
+  * invariant).
+  *
+  * Parquet relations are memoized per (session, path) — `parquet`, which
+  * the fixture tables and the flagship corpus both read through. The memo
+  * relies on a path's files not changing within a session, the same
+  * assumption as Commit's lineage resume. */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
@@ -36,15 +41,19 @@ object Tables {
     if (registeredDir.put(spark, sfDir) != sfDir)
       names.foreach(n => table(spark, sfDir, n).createOrReplaceTempView(n))
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The lazy parquet DataFrame at `path`, memoized per (session, path):
+    * the file listing and schema inference run once, on first use. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     // single-generation eviction (the Dem.memo discipline): only the
     // current session's entries are retained, so stopped sessions' plans
-    // are never pinned by the cache. The map is ≤ #tables entries, so the
-    // sweep is trivial.
+    // are never pinned by the cache. The map holds one session's paths,
+    // so the sweep is trivial.
     dfCache.keySet.removeIf(k => k._1 ne spark)
     registeredDir.keySet.removeIf(k => k ne spark)
-    dfCache.computeIfAbsent((spark, s"$sfDir/$name.parquet"),
-      k => k._1.read.parquet(k._2))
+    dfCache.computeIfAbsent((spark, path), k => k._1.read.parquet(k._2))
   }
 
   /** Scale-adaptive parallelism rescue for expensive per-row work (guide

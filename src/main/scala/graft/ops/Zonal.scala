@@ -31,7 +31,7 @@ object Zonal {
       "count(*) AS n, min(n_chars) AS mn, max(n_chars) AS mx"
 
   private def membershipWithVals(s: SparkSession, dir: String): DataFrame =
-    // Carry the value columns THROUGH the membership broadcast join instead
+    // Carry the value columns THROUGH the membership probe instead
     // of re-joining pages on doc_id afterwards (guide §2.4 "remove shuffles
     // outright" / avoid recomputed subtrees): the old shape scanned pages
     // twice and planned a second join whose only purpose was re-attaching
